@@ -103,11 +103,10 @@ HEADLINE = [
     "cdc_row_diff",
     "o_compaction_exec",
     # r15: the eleven queries registered this round (staged in r14) —
-    # their first driver-recorded perf series (tools/staged_decade.py
-    # holds the measured k=1/k=10 decade rows that preceded
-    # registration). The cdf pair build their table at
-    # plan-construction time like cdc_row_diff above (lifecycle
-    # timing, deliberately).
+    # their first recorded perf series (SCALE.md holds the
+    # measured k=1/k=10 decade rows that preceded registration). The
+    # cdf pair build their table at plan-construction time like
+    # cdc_row_diff above (lifecycle timing, deliberately).
     "g_pagerank",
     "g_pagerank_dangling",
     "g_ppr_seeded",

@@ -296,8 +296,8 @@ def hits(
     nodes with no out-edges, ``auth`` 0 for nodes with no in-edges;
     after any full round the per-side max score is exactly ``scale``.
 
-    Scale posture (r16, MEASURED -- tools/graph_skew_probe --op
-    hits): ONE persisted edge cache, NO pre-partitioning, NO
+    Scale posture (r16, MEASURED -- skew probe rows in SCALE.md):
+    ONE persisted edge cache, NO pre-partitioning, NO
     join-strategy hints. The first form shipped with two per-key
     pre-partitioned edge caches plus shuffle_hash hints -- and the
     skew probe caught it concentrating a 10M-edge hub on one task

@@ -1788,8 +1788,8 @@ def shared_cdc_table(spark, sf_dir):
     every consumer with bit-identical reads.
 
     Returns (table_path, v1_snapshot, src_plan). Rebuilds if the
-    cached directory vanished (tmp sweeps, tools/staged_decade's
-    between-run scrub).
+    cached directory vanished (tmp sweeps, a scale run's between-run
+    scrub).
     """
     import os as _os
     import threading as _threading

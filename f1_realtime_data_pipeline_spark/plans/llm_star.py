@@ -550,7 +550,7 @@ def d_dup_clusters_hybrid(spark, sf_dir):
     masses where the clique is quadratic. pytest pins the two
     identities (hybrid==clique when every bucket ≤ cap; hybrid==star
     when the mass bucket exceeds it) and the planted-mass cluster
-    equality; tools/star_sweep.py measures the decade rows. Oracle =
+    equality; SCALE.md holds the measured decade rows. Oracle =
     the same capped branch split + recursive-CTE transitive
     closure."""
     return dd.dup_clusters_hybrid(_docs(spark, sf_dir), threshold=0.5)

@@ -419,9 +419,9 @@ def t_bm25_topk(
     ``terms`` defaults to the registered fixture contract
     (``BM25_QUERY``); a deployment passes its own query terms — this
     is the parameterization the r14 verdict asked to exist in code
-    rather than prose (tools/staged_decade.py passes tile-suffixed
-    terms so the decade rows exercise real retrieval on the scaled
-    fixtures, whose vocabulary is copy-suffixed).
+    rather than prose (the SCALE.md decade rows passed tile-suffixed
+    terms so they exercise real retrieval on the scaled fixtures,
+    whose vocabulary is copy-suffixed).
     Only documents containing ≥1 query term appear (retrieval returns
     matches); ties break on doc_id.
 

@@ -439,8 +439,8 @@ def test_shared_cdc_table_cache_and_rebuild(spark, sf_dir):
     """r16 (VERDICT r15 #3): the four cdc_* consumers share ONE
     committed change-script table per (app, sf_dir). Pins: (1) two
     resolutions return the SAME path and v1 (cache hit — no second
-    lifecycle); (2) deleting the directory (tmp sweep /
-    staged_decade's between-run scrub) forces a REBUILD at a fresh
+    lifecycle); (2) deleting the directory (tmp sweep / a scale
+    run's between-run scrub) forces a REBUILD at a fresh
     uuid path with the identical v1 version and identical read-back;
     (3) different sf_dir keys resolve independently."""
     import os

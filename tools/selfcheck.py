@@ -1,27 +1,30 @@
-"""Self-check harness: mirror the driver's DuckDB-oracle comparison.
+"""Self-check harness: the registry's DuckDB-oracle comparison.
 
 Runs every ``__spark_entry__.queries()`` entry on Spark and its
 ``oracle_sql()`` twin on DuckDB over the same parquet, then compares
 row count, column names, and values (rows sorted, order-insensitive).
+``tests/test_oracle_parity.py`` runs the same comparison in pytest;
+this script is for other data directories and for checking a subset.
 
 Usage:  python tools/selfcheck.py [--sf-dir /root/testdata/sf0.01] [names...]
 
 Exit code 0 iff every checked query matches. Reports both a strict
 (bit-exact) and a tolerant (1e-9 relative on floats) verdict so FP
-drift that might trip the driver's value-hash is visible early.
+drift that a strict value-hash would flag is visible.
 """
 
 from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from f1_realtime_data_pipeline_spark.session import TABLE_NAMES, get_spark  # noqa: E402
@@ -96,6 +99,11 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[
     return problems
 
 
+def failures(problems: list[str]) -> list[str]:
+    """The problems that fail a match: all but the FP-drift warnings."""
+    return [p for p in problems if not p.startswith("col") or "WARNING" not in p]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -131,7 +139,7 @@ def main() -> int:
             failed.append(name)
             continue
         problems = compare(name, sdf, odf)
-        hard = [p for p in problems if not p.startswith("col") or "WARNING" not in p]
+        hard = failures(problems)
         status = "OK" if not hard else "FAIL"
         warn = len(problems) - len(hard)
         print(

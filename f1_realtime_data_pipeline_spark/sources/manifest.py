@@ -331,7 +331,10 @@ def read_snapshot(
 ) -> DataFrame | None:
     """DataFrame over the latest committed snapshot (optionally pruned
     to ``buckets`` — manifest-metadata skipping, no file listing of
-    unrelated buckets). None when the snapshot is empty. The file list
+    unrelated buckets). The named directories are listed on the driver,
+    with no Spark job (``session.get_spark``'s listing threshold), so
+    the read's cost does not jump once a snapshot passes 32 entries.
+    None when the snapshot is empty. The file list
     is resolved NOW: a commit racing this read does not change what
     this DataFrame reads (immutable files), so concurrent readers see
     a consistent snapshot. ``version`` time-travels to an older

@@ -1153,20 +1153,17 @@ def transactional_agg_sink(
             if not touched:  # empty batch: nothing to commit
                 return
             keep = [e for e in entries if e["bucket"] not in touched]
-            affected = [e for e in entries if e["bucket"] in touched]
             both = partial
-            if affected:
-                from pyspark.sql.types import StructType
-
-                reader = spark.read
-                if doc.get("schema") is not None:
-                    reader = reader.schema(StructType.fromJson(doc["schema"]))
-                for e in affected:
-                    both = both.unionByName(
-                        reader.parquet(f"{sink_path}/{e['path']}").withColumn(
-                            _BUCKET_COL, F.lit(e["bucket"])
-                        )
-                    )
+            if len(keep) < len(entries):
+                # the touched buckets' committed rows, read as one
+                # relation; the recorded bucketing makes the key hash
+                # equal each directory's bucket id.
+                committed = manifest.read_snapshot(
+                    spark, sink_path, buckets=sorted(touched), doc=doc
+                )
+                both = both.unionByName(
+                    committed.withColumn(_BUCKET_COL, _key_bucket(group_cols, nb))
+                )
             # repartition on the bucket column FIRST: hashpartitioning
             # on _BUCKET_COL (a function of the group key) satisfies
             # the merge aggregate's clustered distribution on

@@ -15,14 +15,18 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 
 import pytest
+
+#: the checkout this file lives in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
 def bench():
     spec = importlib.util.spec_from_file_location(
-        "bench_under_test", "/root/repo/bench.py"
+        "bench_under_test", os.path.join(ROOT, "bench.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -36,7 +40,7 @@ def prev_artifact():
     the suite (ADVICE r15)."""
     import glob
 
-    for path in sorted(glob.glob("/root/repo/BENCH_r*.json"),
+    for path in sorted(glob.glob(os.path.join(ROOT, "BENCH_r*.json")),
                        reverse=True):
         art = json.load(open(path))
         parsed = art.get("parsed") or {}
@@ -150,7 +154,7 @@ def test_real_repo_resolution_survives_r15_null(bench):
     """Against the real repo root: resolution must return a usable
     record (r14 artifact or newer history), never crash, never pick
     the null-parsed r15 artifact."""
-    out = bench.resolve_prev(0.1, "/root/repo")
+    out = bench.resolve_prev(0.1, ROOT)
     assert out is not None
     rnd, source, queries, ctl = out
     assert queries and ctl

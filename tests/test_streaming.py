@@ -875,6 +875,53 @@ def test_transactional_sink_snapshot_isolation(spark, tmp_path):
     assert read_sink_snapshot(spark, sink).count() == 30
 
 
+def test_snapshot_read_lists_on_the_driver(spark, tmp_path):
+    """A snapshot read over more than 32 entries submits no Spark job:
+    the session lists the named directories on the driver instead of
+    in a parallel-listing job. Covers the sink read and the dashboard's
+    per-request ``F1Engine.from_lakehouse``."""
+    import datetime
+
+    from f1_realtime_data_pipeline_spark.engine import F1Engine
+    from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
+    from f1_realtime_data_pipeline_spark.sources import manifest as mf
+    from f1_realtime_data_pipeline_spark.streaming.pipeline import RESULT_KEYS
+    from f1_realtime_data_pipeline_spark.streaming.sinks import (
+        read_sink_snapshot,
+        transactional_parquet_sink,
+    )
+
+    fact = str(tmp_path / "fact")
+    dim = str(tmp_path / "dim")
+    fixtures.drivers(spark).write.parquet(dim)
+    write = transactional_parquet_sink(
+        fact, RESULT_KEYS, order_cols=["date", "grand_prix"], n_buckets=16
+    )
+    day = datetime.datetime(2024, 3, 2)
+    for epoch in range(3):
+        rows = [
+            ("Bahrain", day, str(d), d + 1, 57, False, "+0.0", "m1", f"s{epoch}", 1)
+            for d in range(64)
+        ]
+        write(spark.createDataFrame(rows, RACE_RESULTS), epoch)
+    # 64 keys per epoch fill all 16 buckets: one entry each per epoch
+    assert len(mf.resolve_snapshot_doc(spark, fact)["entries"]) == 48
+
+    sc = spark.sparkContext
+    group = f"snapshot-read-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        snap = read_sink_snapshot(spark, fact)
+        eng = F1Engine.from_lakehouse(spark, fact, dim)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert snap.count() == 192
+    assert eng.results.count() == 192
+
+
 def test_transactional_sink_streaming_replay_end_to_end(spark, tmpdirs):
     """The replay-twice e2e through the manifest-committed sink: same
     pipeline as test_replay_pipeline_end_to_end_and_idempotent with

@@ -14,10 +14,12 @@ Usage: python tools/plan_audit.py [--sf-dir DIR] [--write] [names...]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from f1_realtime_data_pipeline_spark.session import get_spark  # noqa: E402
@@ -403,7 +405,7 @@ def main() -> int:
         print(f"\nPLAN SMELLS: {bad}", file=sys.stderr)
 
     if args.write:
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
             f.write(
                 "# PLANS — physical-plan vitals of the audited queries\n\n"
                 "Generated by `python tools/plan_audit.py --write` at "

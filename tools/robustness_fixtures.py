@@ -69,6 +69,9 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+#: the checkout this file lives in (its registry is the one swept)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = [
     "region",
     "nation",
@@ -324,7 +327,7 @@ def unicode_family() -> list[str]:
     registry so the list cannot silently go stale."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
 
     names = [
@@ -342,7 +345,7 @@ def skew_family() -> list[str]:
     doc_id domain for its payload staging)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
 
     return [

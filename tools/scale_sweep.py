@@ -40,7 +40,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -268,7 +269,7 @@ def main() -> int:
                 ),
             )
             proc = subprocess.run(
-                [sys.executable, "/root/repo/bench.py"],
+                [sys.executable, os.path.join(ROOT, "bench.py")],
                 env=env,
                 capture_output=True,
                 text=True,

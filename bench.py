@@ -534,20 +534,20 @@ def main() -> int:
         # untimed, between queries only (see reclaim_scratch)
         reclaim_scratch(spark)
 
-    # idempotent-sink epoch probes (BASELINE.md's only latency figure is
-    # the reference's ~0.6-0.7 s micro-batch): one foreachBatch epoch of
-    # the keyed sink — within-batch dedup + bucket-pruned anti-join +
-    # partitioned parquet append — over the full q0 transform output
-    # (~1000x the reference's batch rows at sf0.1). "first" = empty
-    # sink; "replay" = the SAME batch again (every key already written:
-    # the anti-join drops all rows — the exactly-once replay cost).
+    # row-sink epoch probes (BASELINE.md's only latency figure is the
+    # reference's ~0.6-0.7 s micro-batch): one foreachBatch epoch of
+    # the keyed manifest sink — within-batch dedup + bucket-pruned
+    # anti-join + bucketed parquet write + atomic commit — over the
+    # full q0 transform output (~1000x the reference's batch rows at
+    # sf0.1). "first" = empty sink; "replay" = the SAME batch again
+    # (every key already written: the anti-join drops all rows — the
+    # exactly-once replay cost).
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
     from f1_realtime_data_pipeline_spark.streaming.sinks import (
-        idempotent_parquet_sink,
         transactional_delete,
         transactional_merge,
         transactional_parquet_sink,
@@ -557,13 +557,12 @@ def main() -> int:
     probe_times: dict[str, list[float]] = {
         "sink_epoch_first": [],
         "sink_epoch_replay": [],
-        "sink_epoch_txn": [],
         "sink_epoch_merge": [],
         "sink_epoch_delete": [],
     }
     for _ in range(runs):
         sink_dir = tempfile.mkdtemp(prefix="bench_sink_") + "/sink"
-        write = idempotent_parquet_sink(
+        write = transactional_parquet_sink(
             sink_dir, keys=["event_id"], order_cols=["event_time"]
         )
         t0 = time.time()
@@ -572,28 +571,19 @@ def main() -> int:
         t0 = time.time()
         write(batch, 1)
         probe_times["sink_epoch_replay"].append(time.time() - t0)
-        # same first epoch through the manifest-committed sink: the
-        # transactional overhead = snapshot resolve + atomic commit
-        txn_dir = os.path.dirname(sink_dir) + "/txn"
-        write_txn = transactional_parquet_sink(
-            txn_dir, keys=["event_id"], order_cols=["event_time"]
-        )
-        t0 = time.time()
-        write_txn(batch, 0)
-        probe_times["sink_epoch_txn"].append(time.time() - t0)
         # MERGE epoch: a 10% overlapping update slice through the
         # bucket-granular copy-on-write path (replace + carry-over)
         ups = batch.filter(F.pmod(F.col("event_id"), F.lit(10)) == 0)
         t0 = time.time()
         transactional_merge(
-            ups, txn_dir, keys=["event_id"], order_cols=["event_time"]
+            ups, sink_dir, keys=["event_id"], order_cols=["event_time"]
         )
         probe_times["sink_epoch_merge"].append(time.time() - t0)
         # DELETE epoch: erase the same 10% slice copy-on-write (the
         # right-to-be-forgotten pass at the q0 batch scale)
         t0 = time.time()
         transactional_delete(
-            ups.select("event_id"), txn_dir, keys=["event_id"]
+            ups.select("event_id"), sink_dir, keys=["event_id"]
         )
         probe_times["sink_epoch_delete"].append(time.time() - t0)
         shutil.rmtree(os.path.dirname(sink_dir), ignore_errors=True)

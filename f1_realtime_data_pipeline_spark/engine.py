@@ -7,13 +7,14 @@ four serving queries). Here that is::
 
     from f1_realtime_data_pipeline_spark.engine import F1Engine
 
-    eng = F1Engine.from_parquet(spark, fact_path, dim_path)
+    q = F1Engine(spark, empty_results, drivers).start_ingest(
+        src_dir, fact_table, ckpt)   # Q0 → manifest table, exactly-once
+    eng = F1Engine.from_lakehouse(spark, fact_table, dim_path)
     eng.standings()            # Q1 (streamlit-app.py:41-60)
     eng.champion()             # Q2 (streamlit-app.py:65-66)
     eng.classification("Monza")# Q3 (streamlit-app.py:107-121)
     eng.podium()               # Q4 (streamlit-app.py:127-133)
     eng.available_gps()        # the GP picker
-    q = eng.start_ingest(src_dir, fact_path, ckpt)   # Q0, idempotent
 
 Every method returns a DataFrame (lazy); rendering is the caller's
 concern, same as the reference's Streamlit layer. ``dedup=True``
@@ -94,7 +95,10 @@ class F1Engine:
         self, source_dir: str, sink_dir: str, checkpoint_dir: str
     ) -> StreamingQuery:
         """Broker-less replay ingest: JSON files → Q0 transform →
-        idempotent keyed sink (exactly-once on replay)."""
+        the manifest fact table at ``sink_dir`` through the keyed row
+        sink (exactly-once on replay). Serve it with
+        :meth:`from_lakehouse`; :meth:`erase_results` and
+        :meth:`results_changes` take the same path."""
         from f1_realtime_data_pipeline_spark.streaming.pipeline import (
             start_replay_pipeline,
         )

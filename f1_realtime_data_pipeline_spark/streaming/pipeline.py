@@ -4,9 +4,12 @@ Reference lifecycle (spark_ingestion.py:80-136): Kafka source → cast →
 from_json → flatten → points CASE → to_timestamp → not-null filter →
 foreachBatch JDBC append, checkpointed, append mode. Here the same
 transform (``plans.contract_f1.transform_stream`` — literally the
-batch function) runs over either source and lands in the idempotent
-sink, upgrading delivery from at-least-once to effectively-exactly-once
-(§2.8 T5).
+batch function) runs over either source and lands in
+``transactional_parquet_sink``, upgrading delivery from at-least-once
+to effectively-exactly-once (§2.8 T5). Every pipeline here writes a
+manifest table: ``F1Engine.from_lakehouse`` serves it,
+``erase_results`` erases from it and ``results_changes`` reads it
+incrementally, while the streaming writer keeps committing.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ from pyspark.sql.streaming import StreamingQuery
 from f1_realtime_data_pipeline_spark.plans.contract_f1 import transform_stream
 from f1_realtime_data_pipeline_spark.sources.kafka import kafka_stream_reader
 from f1_realtime_data_pipeline_spark.sources.replay import raw_value_stream
-from f1_realtime_data_pipeline_spark.streaming.sinks import idempotent_parquet_sink
+from f1_realtime_data_pipeline_spark.streaming.sinks import transactional_parquet_sink
 
 #: the idempotency key for race results (§3.4 duplicate amplification)
 RESULT_KEYS = ("session_key", "driver_number")
@@ -39,7 +42,7 @@ def _start_result_pipeline(
     transformed = transform_stream(raw, value_col="value")
     writer = (
         transformed.writeStream.outputMode("append")
-        .foreachBatch(idempotent_parquet_sink(sink_path, RESULT_KEYS))
+        .foreachBatch(transactional_parquet_sink(sink_path, RESULT_KEYS))
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
@@ -55,9 +58,10 @@ def start_replay_pipeline(
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """Broker-less pipeline: replay directory → Q0 transform →
-    idempotent parquet sink. ``availableNow`` drains the backlog in
-    bounded micro-batches then stops — the test/replay trigger; a live
-    deployment would use the default or a processingTime trigger."""
+    manifest table (``transactional_parquet_sink``). ``availableNow``
+    drains the backlog in bounded micro-batches then stops — the
+    test/replay trigger; a live deployment would use the default or a
+    processingTime trigger."""
     raw = raw_value_stream(spark, source_dir, max_files_per_trigger)
     return _start_result_pipeline(
         raw, sink_path, checkpoint_dir, available_now=True
@@ -94,10 +98,10 @@ def start_admission_pipeline(
     ``{doc_id, text}``; each micro-batch drops docs whose exact text
     already exists in the static corpus (stream-static LEFT ANTI join
     on the 8-byte ``xxhash64(text)`` — ``corpus_hashes`` is a static
-    one-column (``h``) relation), then appends through the idempotent
-    sink keyed on the same hash, which also dedups duplicates WITHIN
-    the stream and across replays (exactly-once under checkpoint
-    loss, §2.8 T5 semantics).
+    one-column (``h``) relation), then commits through the keyed row
+    sink (``transactional_parquet_sink``) on the same hash, which also
+    dedups duplicates WITHIN the stream and across replays
+    (exactly-once under checkpoint loss, §2.8 T5 semantics).
 
     At 100 TB the static side is the corpus' hash index — bucketed on
     ``h`` so the per-batch anti-join prunes to matching buckets. No
@@ -130,7 +134,7 @@ def start_admission_pipeline(
     )
     return (
         admitted.writeStream.outputMode("append")
-        .foreachBatch(idempotent_parquet_sink(sink_path, ["h"]))
+        .foreachBatch(transactional_parquet_sink(sink_path, ["h"]))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

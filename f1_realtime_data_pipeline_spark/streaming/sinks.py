@@ -10,21 +10,21 @@ replays and overlapping batches are no-ops.
 Scale posture: on a real deployment this is Delta ``MERGE INTO`` keyed
 on (session_key, driver_number) — transactional, concurrent-writer
 safe, and the anti-join is a metadata-pruned merge instead of a full
-key scan. Delta isn't on this container's classpath, so the contract
-is implemented here in grades: :func:`idempotent_parquet_sink` (plain
-partitioned parquet, single streaming writer — exactly Structured
-Streaming's execution model); :func:`transactional_parquet_sink`
-(r5), the same semantics on the atomic-manifest format
-(:mod:`~f1_realtime_data_pipeline_spark.sources.manifest`) so
-concurrent READERS get snapshot isolation, the anti-join prunes by
-commit metadata instead of directory listing, and commits can carry
-per-directory min/max stats for data-skipping reads;
-:func:`transactional_merge` (r5), batch MERGE INTO as bucket-granular
-copy-on-write; and :func:`transactional_agg_sink` (r5), the streaming
-materialized view — exactly-once AGGREGATION via an applied-epoch
-ledger inside the atomic commit (a key anti-join cannot protect an
-aggregate: replays double-count instead of colliding). A JDBC mirror
-(S5) stays available via ``jdbc_append_writer`` for reference parity.
+key scan. Delta is not a dependency here, so every keyed writer
+commits to the atomic-manifest table format
+(:mod:`~f1_realtime_data_pipeline_spark.sources.manifest`): concurrent
+READERS get snapshot isolation, the anti-join prunes by commit
+metadata instead of directory listing, and commits can carry
+per-directory min/max stats for data-skipping reads. The writers:
+:func:`transactional_parquet_sink`, the one keyed row sink every
+streaming pipeline writes through; :func:`transactional_merge` and
+:func:`transactional_delete`, batch MERGE INTO and DELETE as
+bucket-granular copy-on-write; and :func:`transactional_agg_sink`, the
+streaming materialized view — exactly-once AGGREGATION via an
+applied-epoch ledger inside the atomic commit (a key anti-join cannot
+protect an aggregate: replays double-count instead of colliding). A
+JDBC mirror (S5) stays available via ``jdbc_append_writer`` for
+reference parity.
 """
 
 from __future__ import annotations
@@ -33,19 +33,20 @@ import json
 from collections.abc import Callable, Sequence
 from uuid import uuid4
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from f1_realtime_data_pipeline_spark.sources import manifest
 
-#: key-hash partition count for the idempotent sink. Each micro-batch
-#: anti-joins only against the sink partitions its own keys hash into,
-#: so the dedup read is pruned to ≤ |batch-distinct-buckets| partitions
-#: instead of the whole sink — at 100 TB that's the difference between
-#: a bounded read and a full key scan per epoch. More buckets = finer
-#: pruning but more small files; tune to sink size / epoch cadence.
+#: default key-hash bucket count of the keyed writers. Each micro-batch
+#: anti-joins only against the bucket directories its own keys hash
+#: into, so the dedup read is pruned to ≤ |batch-distinct-buckets|
+#: buckets instead of the whole sink — at 100 TB that's the difference
+#: between a bounded read and a full key scan per epoch. More buckets =
+#: finer pruning but more small files; tune to sink size / epoch
+#: cadence. A table's first commit records its count, and the recorded
+#: count wins thereafter (:func:`_resolved_bucketing`).
 SINK_BUCKETS = 16
 _BUCKET_COL = "__kb"
 
@@ -251,157 +252,6 @@ def _anti_join_on_keys(
     )
 
 
-def _resolved_plain_buckets(
-    spark, sink_path: str, n_buckets: int, keys: Sequence[str] = ()
-) -> int:
-    """The plain (non-manifest) sink's bucket-layout record: a sidecar
-    ``_sink_buckets.json`` written once at first epoch and
-    AUTHORITATIVE thereafter — the non-transactional twin of
-    :func:`_resolved_bucketing`. Single-writer contract (documented on
-    the sink), so a lost race on the sidecar just means another epoch
-    of the same query recorded the same value first."""
-    meta_path = f"{sink_path}/_sink_buckets.json"
-    fs, p = manifest.fs_for(spark, meta_path)
-    if not fs.exists(p):
-        # pre-sidecar sink with existing data (r7 review): validate
-        # the caller's count against a committed bucket dir before
-        # recording it — same probe as the manifest tables.
-        _, root = manifest.fs_for(spark, sink_path)
-        if fs.exists(root):
-            for st in fs.listStatus(root):
-                nm = st.getPath().getName()
-                if nm.startswith(f"{_BUCKET_COL}="):
-                    _validate_bucket_layout(
-                        spark,
-                        sink_path,
-                        {"path": nm, "bucket": int(nm.split("=", 1)[1])},
-                        keys,
-                        int(n_buckets),
-                    )
-                    break
-        manifest._create_exclusive(
-            spark, meta_path,
-            json.dumps({"n_buckets": _check_bucket_count(n_buckets)}),
-        )
-    return int(json.loads(manifest._read_text(spark, meta_path))["n_buckets"])
-
-
-def idempotent_parquet_sink(
-    sink_path: str,
-    keys: Sequence[str],
-    order_cols: Sequence[str] | None = None,
-    n_buckets: int = SINK_BUCKETS,
-) -> Callable[[DataFrame, int], None]:
-    """Build a ``foreachBatch`` callback: exactly one row per key ever
-    reaches ``sink_path``.
-
-    Within a batch, first-wins under an explicit order — ``order_cols``
-    if given, else ALL non-key columns sorted by name, so the within-key
-    order is a genuine total order (ordering by the keys themselves
-    would be constant inside a key partition and the survivor would be
-    partitioning-dependent). Across batches/replays, existing keys are
-    anti-joined away before the append.
-
-    The sink is laid out partitioned by a stable hash bucket of the
-    keys; the anti-join reads only the buckets present in the current
-    batch (PartitionFilters prune the rest). Existing data is detected
-    by attempting the read — not a driver-local ``os.path.exists``,
-    which is wrong on HDFS/S3 — and an unreadable/empty sink dir (e.g.
-    a partially failed first epoch left no parquet footers) degrades to
-    plain first-epoch append instead of killing the query.
-
-    Contract note: correct for a SINGLE streaming writer (Structured
-    Streaming's model — one query, serial epochs). Concurrent writers
-    need a transactional table format (Delta/Iceberg MERGE INTO); this
-    parquet variant implements the same semantics without one on the
-    classpath.
-    """
-    keys = list(keys)
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        order = _resolve_order(batch_df, keys, order_cols)
-        # bucket layout is a PROPERTY OF THE SINK, not of this process:
-        # the first epoch records n_buckets in a sidecar and every
-        # later epoch uses the RECORDED value — restarting the query
-        # with a retuned SINK_BUCKETS would otherwise hash replayed
-        # keys into different partition dirs, the anti-join would miss
-        # their existing rows, and duplicates would land (the same
-        # failure the transactional sinks close via the manifest's
-        # recorded bucketing; r6 review fix for the plain sink).
-        nb = _resolved_plain_buckets(
-            batch_df.sparkSession, sink_path, n_buckets, keys=keys
-        )
-        # bucket the RAW batch; the first-wins dedup happens inside
-        # _dedup_clustered, fused with the clustering exchange (r17).
-        # Anti-join BEFORE dedup is value-identical: both operate on
-        # whole key groups (the anti-join drops every row of an
-        # already-written key; dedup picks the same survivor from the
-        # surviving groups) — pinned in tests/test_streaming.py.
-        pre = batch_df.withColumn(_BUCKET_COL, _key_bucket(keys, nb))
-        # persist: the batch feeds two actions (bucket-list collect +
-        # the append) — without it the micro-batch SOURCE is scanned
-        # twice per epoch
-        pre.persist()
-        try:
-            batch = pre
-            # first-epoch probe via the Hadoop FileSystem API. Probe
-            # for a DATA partition dir, not bare dir existence (r7
-            # review: the sidecar write above always creates the sink
-            # dir, so an exists(root) check was dead and every first
-            # epoch still took the AnalysisException path the comment
-            # claimed to avoid).
-            fs, root = manifest.fs_for(batch_df.sparkSession, sink_path)
-            has_data = fs.exists(root) and any(
-                st.getPath().getName().startswith(f"{_BUCKET_COL}=")
-                for st in fs.listStatus(root)
-            )
-            if has_data:
-                # prune the dedup read to the batch's own buckets (a
-                # micro-batch touches ≤ n_buckets partition values).
-                # Collected only on this branch — the first epoch of a
-                # fresh sink has nothing to anti-join against, and the
-                # distinct-bucket collect was a whole wasted Spark job
-                # there (r16 optimization round). Collected OUTSIDE the
-                # try (ADVICE r16 #1): the except must only guard the
-                # sink read — an AnalysisException from the collect
-                # itself must propagate, not silently skip the
-                # idempotence anti-join and append duplicate keys.
-                batch_buckets = sorted(_touched_buckets(pre))
-                try:
-                    existing = pruned_sink_keys(
-                        batch_df.sparkSession, sink_path, keys, batch_buckets
-                    )
-                except AnalysisException:
-                    # dir exists but holds no readable footers (a
-                    # partially failed first epoch): plain append
-                    existing = None
-                if existing is not None:
-                    batch = _anti_join_on_keys(batch, existing, keys)
-            _dedup_clustered(batch, keys, order).write.mode(
-                "append"
-            ).partitionBy(_BUCKET_COL).parquet(sink_path)
-        finally:
-            pre.unpersist()
-
-    return write
-
-
-def pruned_sink_keys(
-    spark, sink_path: str, keys: Sequence[str], buckets: Sequence[int]
-) -> DataFrame:
-    """The already-written key set restricted to the given hash
-    buckets. The bucket filter is on the sink's partition column, so it
-    prunes at the file-listing level (``PartitionFilters`` in the scan,
-    asserted by a plan test) — the anti-join never reads the rest of
-    the sink. Raises ``AnalysisException`` when the sink has no
-    readable data yet (callers treat that as the first epoch)."""
-    return (
-        spark.read.parquet(sink_path)
-        .filter(F.col(_BUCKET_COL).isin(list(buckets)))
-        .select(*keys)
-    )
-
-
 def transactional_parquet_sink(
     sink_path: str,
     keys: Sequence[str],
@@ -411,10 +261,17 @@ def transactional_parquet_sink(
     keep_history: int | None = None,
     compact_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """:func:`idempotent_parquet_sink` semantics on the atomic-manifest
-    table format (:mod:`~f1_realtime_data_pipeline_spark.sources.
-    manifest`) — the transactional upgrade SCALE.md promised for the
-    lakehouse call site.
+    """Build a ``foreachBatch`` callback: exactly one row per key ever
+    reaches the manifest table at ``sink_path`` (:mod:`~f1_realtime_
+    data_pipeline_spark.sources.manifest`). Every streaming pipeline
+    writes through this sink.
+
+    Within a batch, first-wins under an explicit order — ``order_cols``
+    if given, else ALL non-key columns sorted by name, so the within-key
+    order is a genuine total order (ordering by the keys themselves
+    would be constant inside a key partition and the survivor would be
+    partitioning-dependent). Across batches and replays, keys already
+    in the committed snapshot are anti-joined away (null-safe).
 
     Per epoch: dedup first-wins within the batch, anti-join against
     the keys of the CURRENT COMMITTED SNAPSHOT (pruned by the
@@ -424,9 +281,7 @@ def transactional_parquet_sink(
     snapshot v+1 by exclusive manifest creation. Readers
     (:func:`read_sink_snapshot`) resolve a committed manifest and read
     only its files, so a reader concurrent with a commit sees either
-    all of the epoch or none of it — never a half-written directory,
-    which the plain-parquet sink cannot guarantee (its readers list
-    the directory tree live).
+    all of the epoch or none of it — never a half-written directory.
 
     Replay story: every attempt writes an ATTEMPT-UNIQUE directory
     (``epoch-<id>-<nonce>``) — committed directories are immutable and
@@ -492,9 +347,15 @@ def transactional_parquet_sink(
             snap_doc, keys, n_buckets, spark=spark, sink_path=sink_path
         )
         # bucket the RAW batch; first-wins dedup is fused with the
-        # clustering exchange in _dedup_clustered (r17 — anti-join
-        # before dedup is value-identical, see idempotent sink note)
+        # clustering exchange in _dedup_clustered (r17). Anti-join
+        # BEFORE dedup is value-identical: both operate on whole key
+        # groups (the anti-join drops every row of an already-written
+        # key; dedup picks the same survivor from the surviving
+        # groups) — pinned in tests/test_streaming.py.
         pre = batch_df.withColumn(_BUCKET_COL, _key_bucket(keys, nb))
+        # persist: the batch feeds two actions (bucket-list collect +
+        # the write) — without it the micro-batch SOURCE is scanned
+        # twice per epoch
         pre.persist()
         try:
             # additive schema evolution (r5): the commit records the
@@ -758,7 +619,7 @@ def transactional_merge(
     columns (additive evolution, same rule as the sink commit); both
     sides are aligned to the merged schema before the union so the
     precedence window sees one shape. Within ``updates``, duplicate
-    keys resolve first-wins under ``order_cols`` — the idempotent-sink
+    keys resolve first-wins under ``order_cols`` — the row sink's
     convention. Returns the committed version.
 
     Concurrent writers (r6): each attempt is a full optimistic
@@ -828,25 +689,21 @@ def transactional_merge(
             side_up = _align_to_schema(
                 up, fields, carry=[_BUCKET_COL]
             ).withColumn("__src", F.lit(1))
+            both = side_up
             if affected:
-                from pyspark.sql.types import StructType
-
-                reader = spark.read
-                if prev_schema is not None:
-                    reader = reader.schema(StructType.fromJson(prev_schema))
-                parts = [
-                    _align_to_schema(
-                        reader.parquet(f"{sink_path}/{e['path']}"), fields
-                    )
+                # the touched buckets' committed rows, read as one
+                # relation pinned to the previous schema (a legacy
+                # table's probed one included); the recorded bucketing
+                # makes the key hash equal each directory's bucket id.
+                base = manifest.read_snapshot(
+                    spark, sink_path, buckets=sorted(touched),
+                    doc={**snap_doc, "schema": prev_schema},
+                )
+                both = both.unionByName(
+                    _align_to_schema(base, fields)
                     .withColumn("__src", F.lit(0))
-                    .withColumn(_BUCKET_COL, F.lit(e["bucket"]))
-                    for e in affected
-                ]
-                both = side_up
-                for p in parts:
-                    both = both.unionByName(p)
-            else:
-                both = side_up
+                    .withColumn(_BUCKET_COL, _key_bucket(keys, nb))
+                )
             # updates beat base; within a side the explicit order
             # decides — one fused exchange dedups AND clusters (r17)
             merged = _dedup_clustered(
@@ -957,20 +814,12 @@ def transactional_delete(
             if not affected:
                 return version, False
             keep = [e for e in entries if e["bucket"] not in touched]
-            from pyspark.sql.types import StructType
-
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(StructType.fromJson(schema))
-            parts = [
-                reader.parquet(f"{sink_path}/{e['path']}").withColumn(
-                    _BUCKET_COL, F.lit(e["bucket"])
-                )
-                for e in affected
-            ]
-            base = parts[0]
-            for p in parts[1:]:
-                base = base.unionByName(p)
+            # the touched buckets' rows as one relation; the recorded
+            # bucketing makes the key hash equal each directory's
+            # bucket id
+            base = manifest.read_snapshot(
+                spark, sink_path, buckets=sorted(touched), doc=snap_doc
+            ).withColumn(_BUCKET_COL, _key_bucket(keys, nb))
             # no forced broadcast: erase_results can legitimately pass
             # an arbitrarily large key set (every row of many drivers)
             # — let AQE pick broadcast only when the set is actually
@@ -1220,7 +1069,7 @@ def jdbc_append_writer(
     url: str, table: str, properties: dict[str, str]
 ) -> Callable[[DataFrame, int], None]:
     """The reference's JDBC append sink shape (spark_ingestion.py:116-125)
-    — at-least-once by construction; pair with :func:`idempotent_
+    — at-least-once by construction; pair with :func:`transactional_
     parquet_sink` semantics (MERGE on key) on databases that support it.
     Requires a JDBC driver jar on the classpath. Proven end-to-end
     against a real database (r8, VERDICT r7 #6): the embedded-Derby

@@ -133,11 +133,12 @@ def test_batch_repair_picks_same_winner_as_streaming_sink(spark, tmp_path):
     # r7 property (VERDICT r6 #9): on a dirty table with CONFLICTING
     # duplicates (same (session_key, driver_number), different
     # payloads), the batch repair (dedup_results) must keep exactly
-    # the row the streaming idempotent sink would have kept — both
+    # the row the streaming row sink would have kept — both
     # first-wins under the shared all-non-key-columns-by-name order,
     # independent of input partitioning.
     from f1_realtime_data_pipeline_spark.streaming.sinks import (
-        idempotent_parquet_sink,
+        read_sink_snapshot,
+        transactional_parquet_sink,
     )
 
     clean = fixtures.race_results(spark)
@@ -154,12 +155,12 @@ def test_batch_repair_picks_same_winner_as_streaming_sink(spark, tmp_path):
     }
 
     sink = str(tmp_path / "sink")
-    idempotent_parquet_sink(sink, keys=["session_key", "driver_number"])(dirty, 0)
+    transactional_parquet_sink(sink, keys=["session_key", "driver_number"])(dirty, 0)
     kept = {
         (r.session_key, r.driver_number): tuple(
             r[c] for c in contract_f1.dedup_results(dirty).columns
         )
-        for r in spark.read.parquet(sink)
+        for r in read_sink_snapshot(spark, sink)
         .select(*dirty.columns)
         .collect()
     }

@@ -43,8 +43,9 @@ def test_engine_serves_reference_queries(spark, tmp_path):
 
 
 def test_engine_ingest_then_serve(spark, tmp_path):
-    # Q0 end-to-end through the facade: raw JSON replay → idempotent
-    # sink → the engine serves from what it ingested.
+    # Q0 end-to-end through the facade: raw JSON replay → manifest
+    # fact table → the engine serves, erases and reads changes from
+    # what it ingested.
     src = str(tmp_path / "src")
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
@@ -59,11 +60,20 @@ def test_engine_ingest_then_serve(spark, tmp_path):
     q = bootstrap.start_ingest(src, sink, ckpt)
     q.awaitTermination(120)
 
-    eng = F1Engine.from_parquet(spark, sink, dim_path)
+    eng = F1Engine.from_lakehouse(spark, sink, dim_path)
     s = eng.standings()
     assert s.count() > 0
     # ingest filtered unfinished rows: every served row has a position
     assert eng.results.filter(F.col("position").isNull()).count() == 0
+
+    # the ingested table takes the lakehouse verbs too
+    assert eng.results.filter(F.col("driver_number") == "1").count() > 0
+    eng.erase_results(sink, ["1"])
+    erased = F1Engine.from_lakehouse(spark, sink, dim_path)
+    assert erased.results.filter(F.col("driver_number") == "1").count() == 0
+    changes = eng.results_changes(sink, 0)
+    assert changes is not None and changes.count() > 0
+    assert changes.filter(F.col("driver_number") == "1").count() == 0
 
 
 def test_engine_lakehouse_points_view_and_upsert(spark, tmp_path):

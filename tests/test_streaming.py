@@ -24,6 +24,7 @@ from f1_realtime_data_pipeline_spark.sources.replay import (
 from f1_realtime_data_pipeline_spark.streaming import state as st
 from f1_realtime_data_pipeline_spark.streaming import windows as sw
 from f1_realtime_data_pipeline_spark.streaming.pipeline import start_replay_pipeline
+from f1_realtime_data_pipeline_spark.streaming.sinks import read_sink_snapshot
 
 
 @pytest.fixture
@@ -51,7 +52,7 @@ def test_replay_pipeline_end_to_end_and_idempotent(spark, tmpdirs):
         spark, tmpdirs["source"], tmpdirs["sink"], tmpdirs["ckpt"]
     )
     q.awaitTermination(120)
-    out = spark.read.parquet(tmpdirs["sink"])
+    out = read_sink_snapshot(spark, tmpdirs["sink"])
     # 11 well-formed finished rows, minus the replayed (s2, "1") dup
     assert out.count() == 10
     assert out.filter(F.col("position").isNull()).count() == 0
@@ -62,7 +63,7 @@ def test_replay_pipeline_end_to_end_and_idempotent(spark, tmpdirs):
         spark, tmpdirs["source"], tmpdirs["sink"], tmpdirs["ckpt"] + "2"
     )
     q2.awaitTermination(120)
-    assert spark.read.parquet(tmpdirs["sink"]).count() == 10
+    assert read_sink_snapshot(spark, tmpdirs["sink"]).count() == 10
 
 
 def test_streaming_tumbling_matches_batch(spark, tmp_path):
@@ -311,14 +312,14 @@ def test_checkpoint_resume_processes_only_new_data(spark, tmpdirs):
     write_replay_batch(tmpdirs["source"], lines[:6], 0)
     q = start_replay_pipeline(spark, tmpdirs["source"], tmpdirs["sink"], tmpdirs["ckpt"])
     q.awaitTermination(120)
-    n_first = spark.read.parquet(tmpdirs["sink"]).count()
+    n_first = read_sink_snapshot(spark, tmpdirs["sink"]).count()
     assert n_first > 0
 
     # new producer flush arrives while the query is down
     write_replay_batch(tmpdirs["source"], lines[6:], 1)
     q2 = start_replay_pipeline(spark, tmpdirs["source"], tmpdirs["sink"], tmpdirs["ckpt"])
     q2.awaitTermination(120)
-    out = spark.read.parquet(tmpdirs["sink"])
+    out = read_sink_snapshot(spark, tmpdirs["sink"])
     # all 10 unique keys present exactly once — batch 0 was not
     # reprocessed (idempotent sink would hide dup rows, but offset
     # reuse is observable through Spark's streaming progress)
@@ -702,50 +703,43 @@ def test_commit_metadata_bounded_by_buckets_touched(spark, tmp_path):
         )(df, 0)
 
 
-def test_idempotent_sink_partition_pruned_read(spark, tmp_path):
+def test_sink_snapshot_read_prunes_to_bucket_dirs(spark, tmp_path):
     """VERDICT r1 #6: the sink is laid out by key-hash bucket and the
-    anti-join's read path prunes to the batch's buckets at the
-    file-listing level (PartitionFilters, not a post-scan filter)."""
+    anti-join's read prunes to the batch's buckets by manifest
+    metadata: a bucket-restricted snapshot read scans only files under
+    that bucket's directories."""
+    from f1_realtime_data_pipeline_spark.sources import manifest as mf
     from f1_realtime_data_pipeline_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-        pruned_sink_keys,
+        transactional_parquet_sink,
     )
 
     sink = str(tmp_path / "bucketed_sink")
-    write = idempotent_parquet_sink(sink, keys=["k"], order_cols=["v"])
-    b1 = spark.createDataFrame([(i, f"v{i}") for i in range(20)], ["k", "v"])
-    write(b1, 0)
-    # replay the same batch plus new keys: only the new keys append
-    b2 = spark.createDataFrame([(i, f"w{i}") for i in range(15, 25)], ["k", "v"])
-    write(b2, 1)
-    out = spark.read.parquet(sink)
-    assert out.count() == 25
-    # overlapping keys 15..19 keep their first-written values; only
-    # the genuinely new keys 20..24 appended from batch 1
-    assert out.filter(F.col("v").startswith("w")).count() == 5
-    assert out.filter((F.col("k") >= 15) & (F.col("k") < 20))\
-        .filter(F.col("v").startswith("w")).count() == 0
-
-    pruned = pruned_sink_keys(spark, sink, ["k"], [0, 1])
-    plan = pruned._sc._jvm.PythonSQLUtils.explainString(
-        pruned._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan and "__kb" in plan
+    write = transactional_parquet_sink(sink, keys=["k"], order_cols=["v"])
+    write(spark.createDataFrame([(i, f"v{i}") for i in range(20)], ["k", "v"]), 0)
+    write(spark.createDataFrame([(i, f"w{i}") for i in range(15, 25)], ["k", "v"]), 1)
+    buckets = sorted({e["bucket"] for e in mf.resolve_snapshot(spark, sink)[1]})
+    assert len(buckets) > 1
+    for b in buckets:
+        files = mf.read_snapshot(spark, sink, buckets=[b]).inputFiles()
+        assert files
+        assert all(f"/__kb={b}/" in f for f in files), (b, files)
 
 
 def test_idempotent_sink_first_wins_is_deterministic(spark, tmp_path):
     """ADVICE r1: with order_cols=None the within-batch survivor must
     follow a genuine total order (all non-key columns), not the
     partitioning-dependent constant-key order."""
-    from f1_realtime_data_pipeline_spark.streaming.sinks import idempotent_parquet_sink
+    from f1_realtime_data_pipeline_spark.streaming.sinks import (
+        transactional_parquet_sink,
+    )
 
     sink = str(tmp_path / "det_sink")
-    write = idempotent_parquet_sink(sink, keys=["k"])
+    write = transactional_parquet_sink(sink, keys=["k"])
     dup = spark.createDataFrame(
         [(1, "b"), (1, "a"), (2, "z"), (2, "y")], ["k", "v"]
     ).repartition(8)
     write(dup, 0)
-    got = {r.k: r.v for r in spark.read.parquet(sink).collect()}
+    got = {r.k: r.v for r in read_sink_snapshot(spark, sink).collect()}
     assert got == {1: "a", 2: "y"}
 
 
@@ -922,52 +916,10 @@ def test_snapshot_read_lists_on_the_driver(spark, tmp_path):
     assert eng.results.count() == 192
 
 
-def test_transactional_sink_streaming_replay_end_to_end(spark, tmpdirs):
-    """The replay-twice e2e through the manifest-committed sink: same
-    pipeline as test_replay_pipeline_end_to_end_and_idempotent with
-    the transactional sink swapped in via foreachBatch."""
-    from f1_realtime_data_pipeline_spark.streaming.pipeline import (
-        RESULT_KEYS,
-        raw_value_stream,
-        transform_stream,
-    )
-    from f1_realtime_data_pipeline_spark.streaming.sinks import (
-        read_sink_snapshot,
-        transactional_parquet_sink,
-    )
-
-    lines = _raw_lines(spark)
-    write_replay_batch(tmpdirs["source"], lines[:6], 0)
-    write_replay_batch(tmpdirs["source"], lines[6:], 1)
-    sink = tmpdirs["sink"] + "_txn"
-
-    def run(ckpt):
-        raw = raw_value_stream(spark, tmpdirs["source"], 1)
-        q = (
-            transform_stream(raw, value_col="value")
-            .writeStream.outputMode("append")
-            .foreachBatch(
-                transactional_parquet_sink(
-                    sink, RESULT_KEYS, order_cols=["date", "grand_prix"]
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run(tmpdirs["ckpt"] + "_txn")
-    assert read_sink_snapshot(spark, sink).count() == 10
-    # full replay with a fresh checkpoint: snapshot must not grow
-    run(tmpdirs["ckpt"] + "_txn2")
-    assert read_sink_snapshot(spark, sink).count() == 10
-
-
 def test_admission_pipeline_streams_only_novel_docs(spark, tmp_path):
     # streaming twin of d_incremental_dedup: corpus-known text is
     # rejected at the gate; a replayed/duplicated novel doc lands
-    # exactly once (idempotent sink keyed on the text hash)
+    # exactly once (the keyed row sink on the text hash)
     import json as js
 
     from f1_realtime_data_pipeline_spark.streaming.pipeline import (
@@ -1001,7 +953,7 @@ def test_admission_pipeline_streams_only_novel_docs(spark, tmp_path):
         spark, str(src), corpus_hashes, str(tmp_path / "sink"), str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
-    out = spark.read.parquet(str(tmp_path / "sink"))
+    out = read_sink_snapshot(spark, str(tmp_path / "sink"))
     texts = sorted(r.text for r in out.collect())
     assert texts == ["another novel doc", "brand new doc"]
     # exactly ONE of the two copies of the replayed novel text
@@ -1916,23 +1868,25 @@ def test_jsonable_stat_normalizes_aware_datetimes_to_utc():
     assert mf.jsonable_stat(dt.datetime(2024, 1, 1, 9, 0)) == "2024-01-01T09:00:00"
 
 
-def test_plain_sink_records_bucket_layout(spark, tmpdirs):
-    """r6 review fix: the idempotent sink records n_buckets in a
-    sidecar at first epoch; a restarted writer with a RETUNED bucket
-    count still prunes/anti-joins against the recorded layout, so a
-    replay stays a no-op instead of appending duplicates."""
+def test_row_sink_recorded_bucket_count_wins_on_restart(spark, tmpdirs):
+    """r6 review fix: the row sink records n_buckets in the manifest
+    at first commit; a restarted writer with a RETUNED bucket count
+    still prunes/anti-joins against the recorded layout, so a replay
+    stays a no-op instead of appending duplicates."""
+    from f1_realtime_data_pipeline_spark.sources import manifest as mf
     from f1_realtime_data_pipeline_spark.streaming.sinks import (
-        idempotent_parquet_sink,
+        transactional_parquet_sink,
     )
 
     sink = tmpdirs["sink"] + "_layout"
     batch = spark.createDataFrame(
         [(i, f"v{i}") for i in range(40)], ["k", "v"]
     )
-    idempotent_parquet_sink(sink, keys=["k"], n_buckets=16)(batch, 0)
+    transactional_parquet_sink(sink, keys=["k"], n_buckets=16)(batch, 0)
     # operator restart with a different tuning: replay the same batch
-    idempotent_parquet_sink(sink, keys=["k"], n_buckets=32)(batch, 1)
-    out = spark.read.parquet(sink)
+    transactional_parquet_sink(sink, keys=["k"], n_buckets=32)(batch, 1)
+    assert mf.resolve_snapshot_doc(spark, sink)["bucketing"]["n_buckets"] == 16
+    out = read_sink_snapshot(spark, sink)
     assert out.count() == 40  # no duplicates: recorded layout won
     assert out.select("k").distinct().count() == 40
 
@@ -2225,21 +2179,21 @@ def test_idempotent_sink_null_key_rows_stay_exactly_once(spark, tmp_path):
     # forever (double-counting downstream). The null-safe anti-join
     # treats NULL keys as one key: lands once, replays drop.
     from f1_realtime_data_pipeline_spark.streaming.sinks import (
-        idempotent_parquet_sink,
+        transactional_parquet_sink,
     )
 
     sink = str(tmp_path / "null_key_sink")
-    write = idempotent_parquet_sink(sink, keys=["k"], order_cols=["v"])
+    write = transactional_parquet_sink(sink, keys=["k"], order_cols=["v"])
     batch = spark.createDataFrame(
         [(1, "a"), (None, "n1"), (None, "n2"), (2, "b")], "k int, v string"
     )
     write(batch, 0)
-    first = spark.read.parquet(sink).count()
+    first = read_sink_snapshot(spark, sink).count()
     assert first == 3  # 1, 2, and ONE null-key row (first-wins "n1")
     write(batch, 1)  # replay: nothing may land again
     write(batch.filter("k is null"), 2)  # null-only re-send
-    assert spark.read.parquet(sink).count() == 3
-    vals = {r.v for r in spark.read.parquet(sink).filter("k is null").collect()}
+    assert read_sink_snapshot(spark, sink).count() == 3
+    vals = {r.v for r in read_sink_snapshot(spark, sink).filter("k is null").collect()}
     assert vals == {"n1"}
 
 

@@ -18,8 +18,11 @@ four serving queries). Here that is::
 
 Every method returns a DataFrame (lazy); rendering is the caller's
 concern, same as the reference's Streamlit layer. ``dedup=True``
-(default) repairs duplicate (session_key, driver_number) rows before
-serving — the §3.4 at-least-once hazard the reference carries.
+(the default of the constructor, ``from_parquet`` and ``from_jdbc``)
+repairs duplicate (session_key, driver_number) rows before serving —
+the §3.4 at-least-once hazard the reference carries. ``from_lakehouse``
+runs the repair only when the table's manifest does not record a
+bucketing on that key: such a table already holds one row per key.
 """
 
 from __future__ import annotations
@@ -128,14 +131,27 @@ class F1Engine:
         parquet directory: consistent under concurrent ingest (a
         committed snapshot, never a half-written epoch), so the
         Streamlit-shaped reader and the streaming writer can share the
-        table — what the reference needs Postgres for."""
-        from f1_realtime_data_pipeline_spark.streaming.sinks import (
-            read_sink_snapshot,
-        )
+        table — what the reference needs Postgres for.
 
+        The manifest is resolved once and that document is read. A
+        table whose manifest records its bucketing on the result key
+        (session_key, driver_number) already holds one row per key —
+        every writer that records that layout keeps it (the row sink's
+        anti-join and first-wins, MERGE, DELETE, compaction) — so the
+        ``dedup_results`` repair, a window over the key, is skipped.
+        Any other table is repaired; an explicit ``dedup=`` wins."""
+        from f1_realtime_data_pipeline_spark.sources import manifest
+        from f1_realtime_data_pipeline_spark.streaming.pipeline import RESULT_KEYS
+
+        doc = manifest.resolve_snapshot_doc(spark, fact_table)
+        results = manifest.read_snapshot(spark, fact_table, doc=doc)
+        if results is None:
+            raise ValueError(f"no committed snapshot at {fact_table}")
+        keyed = (doc.get("bucketing") or {}).get("keys") == list(RESULT_KEYS)
+        kw.setdefault("dedup", not keyed)
         return cls(
             spark,
-            read_sink_snapshot(spark, fact_table),
+            results,
             spark.read.schema(DRIVERS).parquet(dim_path),
             **kw,
         )
@@ -324,7 +340,8 @@ class F1Engine:
     def points_view(self, view_path: str) -> DataFrame:
         """The live points view joined to the driver dimension —
         (driver_number, driver_name, total_points, n_results), ordered
-        like the standings board."""
+        like the standings board as one sorted partition (one row per
+        driver, so a range-partitioned sort is pure overhead)."""
         from pyspark.sql import functions as F
 
         from f1_realtime_data_pipeline_spark.streaming.sinks import (
@@ -332,7 +349,7 @@ class F1Engine:
         )
 
         view = read_sink_snapshot(self.spark, view_path)
-        return (
+        board = (
             view.join(
                 F.broadcast(
                     self.drivers.select("driver_number", "driver_name")
@@ -348,7 +365,9 @@ class F1Engine:
                 F.col("points").alias("total_points"),
                 F.col("n_rows").alias("n_results"),
             )
-            .orderBy(F.col("total_points").desc(), F.col("driver_number").asc())
+        )
+        return c._single_partition_sorted(
+            board, F.col("total_points").desc(), F.col("driver_number").asc()
         )
 
     def results_changes(

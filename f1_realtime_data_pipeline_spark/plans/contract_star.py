@@ -18,7 +18,8 @@ aside (unit-tested separately on F1-shaped fixtures), wins-with-default
 ordering with explicit tie-breaks (§3.4).
 
 Exact reference semantics on reference-shaped tables live in
-``plans.contract_f1`` (unit-tested, not oracle-checked).
+``plans.contract_f1`` (unit-tested, and checked through ``F1Engine``
+against a DuckDB twin of the dashboard in ``tests/test_engine.py``).
 
 Determinism vs. the oracle: integer aggregates only (points are ints);
 the one ratio (win_rate) is a single IEEE-754 division identical in both
@@ -123,7 +124,7 @@ def _standings(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds the wins branch in, so the reference's LEFT JOIN +
     COALESCE(wins, 0) (J3, streamlit-app.py:41-60) collapses to a
     conditional count with identical values (0 when a driver never won;
-    the join form itself stays exercised by ``plans.contract_f1`` and
+    the join form itself stays exercised by
     ``j_left_enrich``/``j_lookup_default``). The partial aggregate —
     |drivers|×|months| rows, orders of magnitude below the fact at any
     scale — is materialized via eager ``localCheckpoint`` because both

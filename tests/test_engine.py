@@ -521,3 +521,283 @@ def test_env_empty_string_override_is_rejected_not_ignored(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MAX_PARTITION_BYTES", "")
     with pytest.raises(ValueError, match="SPARK_GRAFT_MAX_PARTITION_BYTES"):
         get_spark("empty-env-probe", cpus=8, shuffle_partitions=8)
+
+
+# -- serving without the dedup window; the DuckDB twin of the engine ----------
+
+#: ten scorers (the dimension's four and six it lacks), then three
+#: drivers who always finish 11th-13th and so tie at 0 points
+_SCORERS = ["1", "10", "16", "22", "3", "44", "5", "63", "81", "99"]
+_NON_SCORERS = ["7", "8", "9"]
+_GPS = [f"GP{i:02d}" for i in range(23)]  # > 22: the season completes
+
+
+def _dirty_rows(seed: int) -> list[tuple]:
+    """Seeded F1-shaped fact rows (RACE_RESULTS order) with the §3.4
+    hazards: exact re-sends and conflicting duplicates of one key, null
+    positions (0 points), null gaps, drivers missing from the dimension
+    and a points tie."""
+    import datetime
+    import random
+
+    from f1_realtime_data_pipeline_spark.functions.points import POINTS_LADDER
+
+    rng = random.Random(seed)
+    day = datetime.datetime(2024, 3, 2, tzinfo=datetime.timezone.utc)
+    rows = []
+    for i, gp in enumerate(_GPS):
+        order = rng.sample(_SCORERS, len(_SCORERS)) + _NON_SCORERS
+        for pos, d in enumerate(order, start=1):
+            running = rng.random() < 0.08
+            position = None if running else pos
+            gap = None if pos == 1 or rng.random() < 0.1 else f"+{pos * 1.3:.3f}"
+            rows.append((
+                gp, day + datetime.timedelta(days=7 * i), d, position, 50, pos > 9,
+                gap, f"m{i}", f"s{i:02d}", POINTS_LADDER.get(position, 0),
+            ))
+    resent = rng.sample(rows, 20)
+    conflicting = [
+        (gp, date, d, 11, laps, dnf, "+9.999", mk, sk, 0)
+        for (gp, date, d, _pos, laps, dnf, _gap, mk, sk, _pts) in rng.sample(rows, 12)
+    ]
+    out = rows + resent + conflicting
+    rng.shuffle(out)
+    return out
+
+
+def _keyed_table(spark, path: str, batches: list[list[tuple]]) -> None:
+    """Write ``batches`` through the row sink, one epoch each."""
+    from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
+    from f1_realtime_data_pipeline_spark.streaming.pipeline import RESULT_KEYS
+    from f1_realtime_data_pipeline_spark.streaming.sinks import transactional_parquet_sink
+
+    write = transactional_parquet_sink(path, RESULT_KEYS)
+    for epoch, rows in enumerate(batches):
+        write(spark.createDataFrame(rows, RACE_RESULTS), epoch)
+
+
+def _served(eng: F1Engine, view: str, gps: list[str]) -> dict[str, list[tuple]]:
+    """The six dashboard answers, in row order, floats rounded."""
+    frames = {
+        "standings": eng.standings(),
+        "champion": eng.champion(),
+        "podium": eng.podium(),
+        "available_gps": eng.available_gps(),
+        "points_view": eng.points_view(view),
+        **{f"classification/{gp}": eng.classification(gp) for gp in gps},
+    }
+    return {
+        k: [tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in df.collect()]
+        for k, df in frames.items()
+    }
+
+
+def _repairs(df) -> bool:
+    """Whether the plan runs a window over the result key."""
+    return "windowspecdefinition(session_key" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _points_view(spark, path: str, rows: list[tuple]) -> str:
+    from f1_realtime_data_pipeline_spark.plans.contract_f1 import dedup_results
+    from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
+    from f1_realtime_data_pipeline_spark.streaming.sinks import transactional_agg_sink
+
+    transactional_agg_sink(path, group_cols=["driver_number"], sum_cols=["points"])(
+        dedup_results(spark.createDataFrame(rows, RACE_RESULTS)), 0
+    )
+    return path
+
+
+def test_keyed_table_served_without_dedup_window(spark, tmp_path):
+    """A row-sink table records its bucketing on the result key, so
+    ``from_lakehouse`` serves it without the repair window, and every
+    answer equals the repaired ``from_parquet`` engine over the same
+    rows (their duplicates are exact re-sends or land in one batch,
+    where the sink keeps the repair's winner)."""
+    from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
+    from f1_realtime_data_pipeline_spark.sources import manifest as mf
+
+    rows = _dirty_rows(7)
+    dim, plain, fact = (str(tmp_path / k) for k in ("dim", "plain", "fact"))
+    fixtures.drivers(spark).write.parquet(dim)
+    spark.createDataFrame(rows, RACE_RESULTS).write.parquet(plain)
+    # two epochs split by GP, so conflicting duplicates share one; the
+    # second also re-sends rows of the first
+    early = [r for r in rows if r[0] < "GP12"]
+    _keyed_table(spark, fact, [early, [r for r in rows if r[0] >= "GP12"] + early[:15]])
+    assert len(mf.snapshot_versions(spark, fact)) == 2
+    view = _points_view(spark, str(tmp_path / "view"), rows)
+
+    lake = F1Engine.from_lakehouse(spark, fact, dim)
+    ref = F1Engine.from_parquet(spark, plain, dim)
+    assert not _repairs(lake.results) and not _repairs(lake.standings())
+    assert _repairs(ref.results)
+    gps = ["GP03", "GP17"]
+    assert _served(lake, view, gps) == _served(ref, view, gps)
+    # an explicit dedup= still wins
+    assert _repairs(F1Engine.from_lakehouse(spark, fact, dim, dedup=True).results)
+
+
+def test_keyed_table_serves_first_batch_payload(spark, tmp_path):
+    """Conflicting duplicates of one key sent in two batches: the row
+    sink keeps the first batch's payload, and the engine serves it —
+    even though the repair's order would prefer the second's."""
+    import datetime
+
+    from f1_realtime_data_pipeline_spark.plans.contract_f1 import dedup_results
+    from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
+
+    day = datetime.datetime(2024, 3, 2, tzinfo=datetime.timezone.utc)
+    first = ("Bahrain", day, "44", 2, 57, False, "+1.000", "m1", "s1", 18)
+    second = ("Bahrain", day, "44", 1, 57, False, None, "m1", "s1", 25)
+    rival = ("Bahrain", day, "1", 3, 57, False, "+2.000", "m1", "s1", 15)
+    both = spark.createDataFrame([first, second], RACE_RESULTS)
+    assert dedup_results(both).collect()[0].position == 1  # the repair's pick
+
+    dim, fact = str(tmp_path / "dim"), str(tmp_path / "fact")
+    fixtures.drivers(spark).write.parquet(dim)
+    _keyed_table(spark, fact, [[first, rival], [second]])
+    eng = F1Engine.from_lakehouse(spark, fact, dim)
+    assert eng.results.count() == 2
+    board = {r.driver_number: (r.points, r.wins) for r in eng.standings().collect()}
+    assert board == {"44": (18, 0), "1": (15, 0)}
+    cls = [(r.driver_number, r.position, r.gap_to_leader) for r in eng.classification("Bahrain").collect()]
+    assert cls == [("44", 2, "+1.000"), ("1", 3, "+2.000")]
+
+
+def test_unkeyed_manifest_table_is_repaired(spark, tmp_path):
+    """A manifest table with duplicate keys and no bucketing record, or
+    one recorded on other keys, is still deduplicated; ``dedup=False``
+    still serves it raw."""
+    import json
+
+    from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
+    from f1_realtime_data_pipeline_spark.sources import manifest as mf
+
+    dim = str(tmp_path / "dim")
+    fixtures.drivers(spark).write.parquet(dim)
+    dirty = fixtures.race_results(spark)  # the replayed (s2, "1") duplicate
+    schema = json.loads(RACE_RESULTS.json())
+    for name, meta in [
+        ("unrecorded", None),
+        ("other_keys", {"bucketing": {"keys": ["driver_number"], "n_buckets": 1}}),
+    ]:
+        table = str(tmp_path / name)
+        dirty.write.parquet(f"{table}/data/epoch-0")
+        assert mf.commit_snapshot(
+            spark, table, 1, [{"path": "data/epoch-0", "bucket": 0}], schema, meta
+        )
+        eng = F1Engine.from_lakehouse(spark, table, dim)
+        assert _repairs(eng.results), name
+        assert eng.results.count() == 10, name
+        assert {r.driver_number: r.points for r in eng.standings().collect()}["1"] == 68
+        raw = F1Engine.from_lakehouse(spark, table, dim, dedup=False)
+        assert not _repairs(raw.results) and raw.results.count() == 11, name
+
+
+_DEDUPED_SQL = """
+    SELECT * FROM results QUALIFY row_number() OVER (
+        PARTITION BY session_key, driver_number
+        ORDER BY date NULLS FIRST, dnf NULLS FIRST, gap_to_leader NULLS FIRST,
+                 grand_prix NULLS FIRST, laps_completed NULLS FIRST,
+                 meeting_key NULLS FIRST, points NULLS FIRST, position NULLS FIRST
+    ) = 1
+"""
+
+#: the reference's dashboard (streamlit-app.py) over the deduplicated
+#: fact: merge with the drivers, then each widget's query
+_TWIN_SQL = {
+    "standings": """
+        WITH m AS (SELECT r.*, d.driver_name, d.headshot_url
+                   FROM r LEFT JOIN drivers d USING (driver_number)),
+             pts AS (SELECT driver_number, driver_name, headshot_url, sum(points) AS points
+                     FROM m GROUP BY driver_number, driver_name, headshot_url),
+             wins AS (SELECT driver_number, count(*) AS wins
+                      FROM m WHERE position = 1 GROUP BY driver_number),
+             tot AS (SELECT count(DISTINCT grand_prix) AS total_gps FROM m)
+        SELECT p.driver_number, driver_name, headshot_url, points,
+               coalesce(wins, 0) AS wins, total_gps,
+               round(coalesce(wins, 0) * 100.0 / total_gps, 2) AS win_rate
+        FROM pts p LEFT JOIN wins USING (driver_number) CROSS JOIN tot
+        ORDER BY points DESC, driver_number
+    """,
+    "champion": "SELECT * FROM standings WHERE total_gps >= 22 LIMIT 1",
+    "podium": """
+        SELECT row_number() OVER (ORDER BY points DESC, driver_number) AS podium_rank,
+               driver_number, driver_name, points
+        FROM standings ORDER BY podium_rank LIMIT 3
+    """,
+    "available_gps": """
+        SELECT grand_prix FROM r WHERE grand_prix IS NOT NULL
+        GROUP BY grand_prix ORDER BY max(date) DESC, grand_prix
+    """,
+    "points_view": """
+        SELECT driver_number, coalesce(any_value(driver_name), 'Unknown') AS driver_name,
+               sum(points) AS total_points, count(*) AS n_results
+        FROM r LEFT JOIN drivers USING (driver_number)
+        GROUP BY driver_number ORDER BY total_points DESC, driver_number
+    """,
+    "classification": """
+        SELECT driver_number, driver_name, position,
+               coalesce(gap_to_leader, 'N/A') AS gap_to_leader
+        FROM r LEFT JOIN drivers USING (driver_number)
+        WHERE grand_prix = ?
+        ORDER BY position NULLS FIRST, driver_number
+    """,
+}
+
+
+def _twin(rows: list[tuple], drivers: list[tuple], gps: list[str]) -> dict[str, list[tuple]]:
+    """The six answers from DuckDB over the same rows."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE results (grand_prix VARCHAR, date TIMESTAMP, driver_number VARCHAR,"
+        " position INTEGER, laps_completed INTEGER, dnf BOOLEAN, gap_to_leader VARCHAR,"
+        " meeting_key VARCHAR, session_key VARCHAR, points INTEGER)"
+    )
+    con.executemany(
+        "INSERT INTO results VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?, ?)",
+        [(r[0], r[1].replace(tzinfo=None), *r[2:]) for r in rows],
+    )
+    con.execute("CREATE TABLE drivers (driver_number VARCHAR, driver_name VARCHAR, headshot_url VARCHAR)")
+    con.executemany("INSERT INTO drivers VALUES (?, ?, ?)", drivers)
+    con.execute(f"CREATE TABLE r AS {_DEDUPED_SQL}")
+    con.execute(f"CREATE TABLE standings AS {_TWIN_SQL['standings']}")
+
+    def fetch(sql, *params):
+        return [
+            tuple(round(v, 9) if isinstance(v, float) else v for v in row)
+            for row in con.execute(sql, list(params)).fetchall()
+        ]
+
+    out = {k: fetch(_TWIN_SQL[k]) for k in ("champion", "podium", "available_gps", "points_view")}
+    out["standings"] = fetch("SELECT * FROM standings")
+    out.update({f"classification/{gp}": fetch(_TWIN_SQL["classification"], gp) for gp in gps})
+    con.close()
+    return out
+
+
+def test_engine_matches_duckdb_twin(spark, tmp_path):
+    """Both serving paths — the repaired parquet fact and the keyed
+    lakehouse table (one batch, so the sink keeps the repair's winner)
+    — answer all six dashboard queries, in row order, exactly as DuckDB
+    SQL written from the reference's dashboard semantics."""
+    from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
+
+    rows = _dirty_rows(11)
+    dim, plain, fact = (str(tmp_path / k) for k in ("dim", "plain", "fact"))
+    fixtures.drivers(spark).write.parquet(dim)
+    spark.createDataFrame(rows, RACE_RESULTS).write.parquet(plain)
+    _keyed_table(spark, fact, [rows])
+    view = _points_view(spark, str(tmp_path / "view"), rows)
+    # the GPs holding null positions and conflicting duplicates
+    gps = sorted({r[0] for r in rows if r[3] is None or r[6] == "+9.999"})[:3]
+
+    want = _twin(rows, [tuple(r) for r in fixtures.drivers(spark).collect()], gps)
+    assert len(want["champion"]) == 1 and len(want["podium"]) == 3
+    assert [r[0] for r in want["standings"][-3:]] == _NON_SCORERS  # tied at 0
+    assert any(r[2] is None for gp in gps for r in want[f"classification/{gp}"])
+    assert _served(F1Engine.from_parquet(spark, plain, dim), view, gps) == want
+    assert _served(F1Engine.from_lakehouse(spark, fact, dim), view, gps) == want

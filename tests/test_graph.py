@@ -236,20 +236,12 @@ def test_hits_validation_and_degenerate(spark):
     assert hits(edges.filter(F.lit(False)), iters=2).count() == 0
 
 
-def test_g_hits_oracle_parity(spark, sf_dir):
+def test_g_hits_shape(spark, sf_dir):
+    # values are checked against the DuckDB twin by the oracle-parity
+    # gate (tests/test_oracle_parity.py); this pins the shape contract:
+    # exactly 10 hubs (customers) + 10 authorities (suppliers); per-side
+    # max score is exactly the scale after a full round
     sdf = gx.QUERIES["g_hits"](spark, sf_dir).toPandas()
-    odf = _oracle_con(sf_dir).execute(gx.ORACLE["g_hits"]).fetchdf()
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    s = sdf.reindex(sorted(sdf.columns), axis=1).sort_values(
-        by=sorted(sdf.columns)
-    ).reset_index(drop=True)
-    o = odf.reindex(sorted(odf.columns), axis=1).sort_values(
-        by=sorted(odf.columns)
-    ).reset_index(drop=True)
-    pd.testing.assert_frame_equal(s, o, check_dtype=False)
-    # shape contract: exactly 10 hubs (customers) + 10 authorities
-    # (suppliers); per-side max score is exactly the scale after a
-    # full round
     kinds = sdf.groupby("kind")["score"].agg(["count", "max"])
     assert kinds.loc["hub", "count"] == 10
     assert kinds.loc["authority", "count"] == 10

@@ -869,19 +869,15 @@ def test_transactional_sink_snapshot_isolation(spark, tmp_path):
     assert read_sink_snapshot(spark, sink).count() == 30
 
 
-def test_snapshot_read_lists_on_the_driver(spark, tmp_path):
-    """A snapshot read over more than 32 entries submits no Spark job:
-    the session lists the named directories on the driver instead of
-    in a parallel-listing job. Covers the sink read and the dashboard's
-    per-request ``F1Engine.from_lakehouse``."""
+def _lakehouse_48(spark, tmp_path) -> tuple[str, str]:
+    """(fact table, driver dimension): three epochs of 64 drivers at one
+    GP through the row sink at 16 buckets — 48 snapshot entries."""
     import datetime
 
-    from f1_realtime_data_pipeline_spark.engine import F1Engine
     from f1_realtime_data_pipeline_spark.schemas import RACE_RESULTS
     from f1_realtime_data_pipeline_spark.sources import manifest as mf
     from f1_realtime_data_pipeline_spark.streaming.pipeline import RESULT_KEYS
     from f1_realtime_data_pipeline_spark.streaming.sinks import (
-        read_sink_snapshot,
         transactional_parquet_sink,
     )
 
@@ -900,20 +896,90 @@ def test_snapshot_read_lists_on_the_driver(spark, tmp_path):
         write(spark.createDataFrame(rows, RACE_RESULTS), epoch)
     # 64 keys per epoch fill all 16 buckets: one entry each per epoch
     assert len(mf.resolve_snapshot_doc(spark, fact)["entries"]) == 48
+    return fact, dim
 
+
+def _jobs_in(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` submits, counted by job group."""
     sc = spark.sparkContext
-    group = f"snapshot-read-{tmp_path.name}"
     sc.setJobGroup(group, group)
     try:
-        snap = read_sink_snapshot(spark, fact)
-        eng = F1Engine.from_lakehouse(spark, fact, dim)
+        fn()
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description",
                      "spark.job.interruptOnCancel"):
             sc.setLocalProperty(prop, None)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    assert snap.count() == 192
-    assert eng.results.count() == 192
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_snapshot_read_lists_on_the_driver(spark, tmp_path):
+    """A snapshot read over more than 32 entries submits no Spark job:
+    the session lists the named directories on the driver instead of
+    in a parallel-listing job. Covers the sink read and the dashboard's
+    per-request ``F1Engine.from_lakehouse``."""
+    from f1_realtime_data_pipeline_spark.engine import F1Engine
+
+    fact, dim = _lakehouse_48(spark, tmp_path)
+    got = {}
+
+    def read():
+        got["snap"] = read_sink_snapshot(spark, fact)
+        got["eng"] = F1Engine.from_lakehouse(spark, fact, dim)
+
+    assert _jobs_in(spark, f"snapshot-read-{tmp_path.name}", read) == 0
+    assert got["snap"].count() == 192
+    assert got["eng"].results.count() == 192
+
+
+#: Spark jobs one dashboard request submits, resolve to collect. The
+#: three standings-derived requests: the dimension broadcast, the
+#: per-driver aggregate's shuffle stage and the result stage; the others
+#: one broadcast or shuffle stage and the result stage.
+SERVE_JOBS = {
+    "standings": 3,
+    "champion": 3,
+    "classification": 2,
+    "podium": 3,
+    "available_gps": 2,
+    "points_view": 2,
+}
+
+
+def test_dashboard_request_jobs(spark, tmp_path):
+    """Each serving method, resolved and collected on the 48-entry
+    table, submits exactly the jobs of its single-pass plan: no dedup
+    window (the table is keyed), no second standings plan and no
+    range-partition sampling for the sorts."""
+    from f1_realtime_data_pipeline_spark.engine import F1Engine
+    from f1_realtime_data_pipeline_spark.streaming.sinks import (
+        transactional_agg_sink,
+    )
+
+    fact, dim = _lakehouse_48(spark, tmp_path)
+    view = str(tmp_path / "view")
+    transactional_agg_sink(view, group_cols=["driver_number"], sum_cols=["points"])(
+        read_sink_snapshot(spark, fact), 0
+    )
+    calls = {
+        "standings": lambda e: e.standings(),
+        "champion": lambda e: e.champion(),
+        "classification": lambda e: e.classification("Bahrain"),
+        "podium": lambda e: e.podium(),
+        "available_gps": lambda e: e.available_gps(),
+        "points_view": lambda e: e.points_view(view),
+    }
+    rows = {}
+
+    def request(name):
+        rows[name] = calls[name](F1Engine.from_lakehouse(spark, fact, dim)).collect()
+
+    got = {
+        name: _jobs_in(spark, f"serve-{name}-{tmp_path.name}", lambda: request(name))
+        for name in calls
+    }
+    assert got == SERVE_JOBS
+    assert len(rows["standings"]) == 64 and len(rows["classification"]) == 192
+    assert rows["champion"] == [] and len(rows["podium"]) == 3
 
 
 def test_admission_pipeline_streams_only_novel_docs(spark, tmp_path):
